@@ -9,6 +9,10 @@ Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 Each query is materialized with the noop sink (full computation, no
 driver-side collect) so the number measures the distributed plan, not
 result transfer.
+
+The timing harness itself (``warm_session``, ``time_queries``,
+``select_queries``) is shared with ``scripts/time_queries.py``, the
+ad-hoc, A/B and scaled lane.
 """
 
 from __future__ import annotations
@@ -17,6 +21,9 @@ import json
 import os
 import sys
 import time
+from typing import Iterable, Iterator, NamedTuple, Sequence
+
+from pyspark.sql import SparkSession
 
 from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
 from team_aragon_spark.session import get_spark
@@ -292,22 +299,25 @@ ORACLE_PIN_SKIP = {
 }
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
-    # Comma-separated query names to skip — for manual scaled runs only
-    # (e.g. q63, the deliberately-linear portable-oracle pin, at 100x).
-    # The driver never sets this; skipping a HEADLINE query breaks
-    # round-over-round comparability of `value`.
-    skip = set(filter(None, os.environ.get("SPARK_GRAFT_SKIP", "").split(",")))
-    if not os.environ.get("SPARK_GRAFT_BENCH_PINS"):
-        skip |= ORACLE_PIN_SKIP
-    spark = get_spark("team-aragon-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def env_sf_dir() -> str:
+    """The scale-factor directory every timing entry point reads."""
+    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    # Warm the JVM/session so startup cost is not attributed to q1, and
-    # the Python UDF workers (pandas import, Arrow channel) so q36
-    # measures the decode plumbing rather than interpreter startup.
+
+def select_queries(names: Iterable[str], wanted: Sequence[str]) -> list[str]:
+    """The names (in their own order) that equal a wanted name or start
+    with it plus ``_``: ``q24`` selects ``q24_minhash_neardup_pairs``,
+    not q240-q249."""
+    return [n for n in names if any(n == w or n.startswith(w + "_") for w in wanted)]
+
+
+def warm_session(app_name: str) -> SparkSession:
+    """The engine session, warmed so startup cost is not attributed to
+    the first query: the JVM/session, and the Python UDF workers
+    (pandas import, Arrow channel) so q36 measures the decode plumbing
+    rather than interpreter startup."""
+    spark = get_spark(app_name)
+    spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count()
 
     def _noop(batches):
@@ -316,46 +326,82 @@ def main() -> None:
     spark.range(64).repartition(8).mapInPandas(_noop, schema="id long").write.format(
         "noop"
     ).mode("overwrite").save()
+    return spark
 
-    # Two passes per query: pass 1 includes one-time costs (codegen
-    # compile, file listing, JIT); pass 2 is the steady-state plan
-    # execution.  `value` is the steady-state total (what a resident
-    # engine process costs per query); `cold_total` records the
-    # first-run total for transparency.
+
+class Timing(NamedTuple):
+    """One query's noop-sink passes, in seconds rounded to 3 digits."""
+
+    name: str
+    passes: tuple[float, ...]
+
+    @property
+    def cold(self) -> float:
+        """The first pass: includes one-time costs (codegen compile,
+        file listing, JIT)."""
+        return self.passes[0]
+
+    @property
+    def steady(self) -> float:
+        """The best pass: what a resident engine process costs per query."""
+        return min(self.passes)
+
+
+def time_queries(
+    spark: SparkSession, names: Iterable[str], sf_dir: str, runs: int = 2
+) -> Iterator[Timing]:
+    """Run each named query ``runs`` times to the noop sink and yield
+    its :class:`Timing` as soon as it finishes.
+
+    The job description is the query name while its passes run.
+    Queries that persist() intermediates (LSH shingles, tf) leave their
+    lifetime to the caller, so the cache is cleared once after each
+    query's passes: repeated queries cannot accumulate executor-storage
+    pressure.
+    """
+    sc = spark.sparkContext
+    try:
+        for name in names:
+            fn = QUERY_REGISTRY[name].fn
+            sc.setJobDescription(name)
+            passes = []
+            for _ in range(runs):
+                t0 = time.monotonic()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                passes.append(round(time.monotonic() - t0, 3))
+            spark.catalog.clearCache()
+            yield Timing(name, tuple(passes))
+    finally:
+        sc.setJobDescription(None)
+
+
+def main() -> None:
+    sf_dir = env_sf_dir()
+    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
+    # Comma-separated query names to skip — for manual scaled runs only
+    # (e.g. q63, the deliberately-linear portable-oracle pin, at 100x).
+    # The driver never sets this; skipping a HEADLINE query breaks
+    # round-over-round comparability of `value`.
+    skip = set(filter(None, os.environ.get("SPARK_GRAFT_SKIP", "").split(",")))
+    if not os.environ.get("SPARK_GRAFT_BENCH_PINS"):
+        skip |= ORACLE_PIN_SKIP
+    spark = warm_session("team-aragon-bench")
+
+    # `value` is the steady-state total (what a resident engine process
+    # costs per query); `cold_total` records the first-run total for
+    # transparency.
     cold: dict[str, float] = {}
     steady: dict[str, float] = {}
-    for name in HEADLINE:
-        if name in skip:
-            continue
-        fn = QUERY_REGISTRY[name].fn
-        runs = []
-        for _ in range(2):
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.monotonic() - t0)
-        cold[name] = round(runs[0], 3)
-        steady[name] = round(min(runs), 3)
-        # queries that persist() intermediates (LSH shingles, tf) manage
-        # lifetime per-invocation via the caller: drop cached blocks so
-        # repeated queries can't accumulate executor-storage pressure
-        spark.catalog.clearCache()
-        print(f"  {name}: cold {cold[name]}s steady {steady[name]}s", file=sys.stderr)
+    for t in time_queries(spark, [n for n in HEADLINE if n not in skip], sf_dir):
+        cold[t.name], steady[t.name] = t.cold, t.steady
+        print(f"  {t.name}: cold {t.cold}s steady {t.steady}s", file=sys.stderr)
 
     # Round-2 operator families, timed separately so the headline total
     # stays directly comparable round-over-round.
     extra_steady: dict[str, float] = {}
-    for name in EXTRA:
-        if name in skip:
-            continue
-        fn = QUERY_REGISTRY[name].fn
-        runs = []
-        for _ in range(2):
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.monotonic() - t0)
-        extra_steady[name] = round(min(runs), 3)
-        spark.catalog.clearCache()
-        print(f"  {name}: steady {extra_steady[name]}s", file=sys.stderr)
+    for t in time_queries(spark, [n for n in EXTRA if n not in skip], sf_dir):
+        extra_steady[t.name] = t.steady
+        print(f"  {t.name}: steady {t.steady}s", file=sys.stderr)
 
     total = round(sum(steady.values()), 3)
     compact = {

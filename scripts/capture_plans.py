@@ -19,10 +19,11 @@ def main() -> None:
     outdir, tag = sys.argv[1], sys.argv[2]
     want = sys.argv[3:]
     os.makedirs(outdir, exist_ok=True)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from bench import env_sf_dir, select_queries
     from team_aragon_spark.session import get_spark
 
+    sf_dir = env_sf_dir()
     spark = get_spark("plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -36,7 +37,7 @@ def main() -> None:
                 if f.endswith("_before.txt")
             }
         )
-    names = [n for n in QUERY_REGISTRY if any(n.startswith(w) for w in want)]
+    names = select_queries(QUERY_REGISTRY, want)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )

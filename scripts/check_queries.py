@@ -35,16 +35,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e
+    from bench import select_queries
     from oracle import compare, duck_connection
 
     con = duck_connection(sf_dir)
     qs = e.queries()
     sqls = e.oracle_sql()
-    names = (
-        list(qs)
-        if "--all" in want
-        else [n for n in qs if any(n.startswith(w) for w in want)]
-    )
+    names = list(qs) if "--all" in want else select_queries(qs, want)
     n_fail = 0
     for name in names:
         t0 = time.monotonic()

@@ -198,15 +198,6 @@ def fake_embed_features(
     )
 
 
-def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:
-    """Frame-sampling stage: keep metadata rows whose frame index grid
-    subsamples by ``every_n`` (arithmetic stand-in for video frame
-    extraction; the real kernel yields one row per sampled frame)."""
-    return df.withColumn(
-        "sampled_frames", F.expr(f"CAST(ceil(n_frames / {every_n}) AS INT)")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Audio (REAL decode — stdlib `wave`, no external deps) and video
 # (av/ffmpeg contract, import-guarded like the PIL image path)

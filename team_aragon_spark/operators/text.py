@@ -33,11 +33,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def char_ngrams_count(col: Column, n: int) -> Column:
-    """Number of character n-grams (length - n + 1, floored at 0)."""
-    return F.greatest(F.length(col) - F.lit(n - 1), F.lit(0))
-
-
 def stopword_hits_expr(text_col: str, words: tuple[str, ...]) -> Column:
     """How many tokens are in the given word list (JVM-side lambda filter)."""
     wordlist = ", ".join(f"'{w}'" for w in words)

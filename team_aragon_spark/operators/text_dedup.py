@@ -854,18 +854,23 @@ def _repeat_spans_arm(
     an optional candidate-position restriction (``cand``: the
     positions whose ``window``-gram can possibly be repeated, from
     the previous arm's halves — see :func:`_gram_occurrences_at` for
-    the exactness argument) and a checkpointed per-occurrence repeat
+    the exactness argument) and a materialized per-occurrence repeat
     relation from which BOTH the merged spans and the next arm's
     repeated-position arrays derive without re-probing the gram
     cache.
 
-    Returns ``(base, spans, rep_positions)`` where ``rep_positions``
-    is (id, ``__ps``: sorted int array of every occurrence position
-    of a corpus-repeated gram, FIRST occurrences included — the next
-    arm's half-filter needs repeats-anywhere, not non-first).  The
-    arm's gram cache is dropped before returning (the q316 arm
-    discipline); the checkpointed repeat relation is bounded by
-    duplicate coverage, far smaller than the gram table.
+    Returns ``(base, spans, rep_positions, repall)`` where
+    ``rep_positions`` is (id, ``__ps``: sorted int array of every
+    occurrence position of a corpus-repeated gram, FIRST occurrences
+    included — the next arm's half-filter needs repeats-anywhere, not
+    non-first).  The arm's gram cache is dropped before returning (the
+    q316 arm discipline); ``repall`` is the persisted, already
+    materialized repeat relation both other outputs read, bounded by
+    duplicate coverage (far smaller than the gram table), and the
+    caller unpersists it once nothing reads it any more.  It is
+    persisted rather than ``localCheckpoint``-ed because a local
+    checkpoint's RDD survives both ``unpersist()`` and
+    ``clearCache()``.
     """
     toks = f"split({text_col}, ' ')"
     base = df.select(F.col(id_col), F.size(F.expr(toks)).alias("n_tokens"))
@@ -890,8 +895,9 @@ def _repeat_spans_arm(
                 & (F.col("pos") == F.col("first.p"))
             ).alias("__isf"),
         )
-        .localCheckpoint(eager=True)
+        .persist()
     )
+    repall.count()
     occ.unpersist()
     rep = repall.filter(~F.col("__isf")).select(
         id_col, "pos", (F.col("pos") + window - 1).alias("endp")
@@ -899,7 +905,7 @@ def _repeat_spans_arm(
     rep_positions = repall.groupBy(id_col).agg(
         F.sort_array(F.collect_list("pos")).alias("__ps")
     )
-    return base, _merge_islands(rep, id_col), rep_positions
+    return base, _merge_islands(rep, id_col), rep_positions, repall
 
 
 def _merge_islands(rep: DataFrame, id_col: str) -> DataFrame:

@@ -71,12 +71,6 @@ def validation_split(df: DataFrame, rules: list[RangeRule], persist: bool = True
     return df.filter(pred), df.filter(~pred)
 
 
-def load_report(valid: DataFrame, invalid: DataFrame) -> dict[str, int]:
-    """Success/error counters (reference O1: ``load_hhs.py:157-161``)."""
-    n_valid, n_invalid = valid.count(), invalid.count()
-    return {"valid": n_valid, "invalid": n_invalid, "total": n_valid + n_invalid}
-
-
 def write_quarantine(invalid: DataFrame, path: str) -> None:
     """CSV quarantine sink (reference K3: ``load_hhs.py:153-155``).
 

@@ -22483,7 +22483,7 @@ FROM n LEFT JOIN agg USING (doc_id))"""
 def q316_substring_window_sensitivity(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     rows = []
-    prev_k, prev_rep = None, None
+    prev_k, prev_rep, prev_held = None, None, None
     for k in _SENS2_KS:
         # Cascade prune (r12; guide §3.2 "prune with a proxy, decide
         # exact" / §8 decide-with-small-rows): an occurrence of a
@@ -22509,9 +22509,14 @@ def q316_substring_window_sensitivity(spark, sf_dir):
             ).filter(F.size("__ps") > 0)
         else:
             cand = None
-        base, spans, rep_pos = text_dedup._repeat_spans_arm(
+        base, spans, rep_pos, held = text_dedup._repeat_spans_arm(
             docs, "text", "doc_id", k, cand
         )
+        # this arm's repeat relation is materialized, so the previous
+        # arm's (read by its readout and by this arm's candidates) is
+        # no longer needed: release it rather than leave it resident
+        if prev_held is not None:
+            prev_held.unpersist()
         per_doc = spans.groupBy("doc_id").agg(
             F.sum(F.col("e") - F.col("s") + 1).alias("dup_tokens")
         )
@@ -22540,8 +22545,9 @@ def q316_substring_window_sensitivity(spark, sf_dir):
             )
             .first()
         )
-        prev_k, prev_rep = k, rep_pos
+        prev_k, prev_rep, prev_held = k, rep_pos, held
         rows.append((k, *r))
+    prev_held.unpersist()  # the result below is built from driver rows
     return spark.createDataFrame(
         rows,
         "window_k int, n_docs_affected bigint, dup_tokens bigint, "

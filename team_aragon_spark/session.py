@@ -17,25 +17,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_parallelism() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
 # Conf that is safe to (re)apply on an existing session at runtime.
 RUNTIME_CONF = {
     # Runtime-settable, so tune() can fix it on an externally-built
     # session too: Spark's default of 200 shuffle partitions means 200
     # scheduled tasks per shuffle regardless of data size — pure
     # overhead at local scale.  AQE coalescing trims further at runtime.
-    "spark.sql.shuffle.partitions": str(
-        int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    ),
+    "spark.sql.shuffle.partitions": str(default_parallelism()),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
-
-
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
 def get_spark(app_name: str = "team-aragon-spark", shuffle_partitions: int | None = None) -> SparkSession:

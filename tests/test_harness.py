@@ -1,0 +1,88 @@
+"""The one query-timing harness: bench.py's ``time_queries`` and
+``select_queries``, and the ``scripts/time_queries.py`` CLI over them."""
+
+from __future__ import annotations
+
+import ast
+import importlib.util
+import os
+
+import pytest
+from conftest import SF_SMOKE
+
+from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _load_cli():
+    spec = importlib.util.spec_from_file_location(
+        "time_queries_cli", os.path.join(REPO, "scripts", "time_queries.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)  # puts the repo root on sys.path
+    return mod
+
+
+cli = _load_cli()
+import bench  # noqa: E402
+
+
+def test_time_queries_cold_is_first_pass_steady_is_min(spark):
+    (t,) = bench.time_queries(spark, ["q01_week_count"], SF_SMOKE, runs=2)
+    assert t.name == "q01_week_count"
+    assert len(t.passes) == 2 and all(p > 0 for p in t.passes)
+    assert t.cold == t.passes[0]
+    assert t.steady == min(t.passes) <= t.cold
+    # the job description is the query name only while its passes run
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
+@pytest.mark.parametrize(
+    "argv, message",
+    [
+        (["q01", "--out"], "expected one argument"),
+        (["q9999_no_such_query"], "no registered query matches"),
+        (["q01", "--runs", "0"], "--runs must be at least 1"),
+    ],
+)
+def test_cli_rejects_bad_argv_before_any_session(argv, message, monkeypatch, capsys):
+    def no_session(*_a, **_k):
+        raise AssertionError("a session was started before argv was checked")
+
+    monkeypatch.setattr(bench, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        cli.main(argv)
+    assert exc.value.code != 0
+    err = capsys.readouterr().err
+    assert err.startswith("usage:") and message in err
+
+
+def test_cli_defaults_and_intermixed_options():
+    args = cli.parse_args([])
+    assert args.names == bench.HEADLINE and args.runs == 2 and args.out is None
+    args = cli.parse_args(["q24", "--runs", "3", "q42", "--out", "t.json"])
+    assert args.names == ["q24_minhash_neardup_pairs", "q42_srp_lsh_neardup_pairs"]
+    assert args.runs == 3 and args.out == "t.json"
+
+
+def test_select_queries_matches_whole_name_segments():
+    assert [n for n in QUERY_REGISTRY if n.startswith("q24")][1:]  # q240-q249 exist
+    assert bench.select_queries(QUERY_REGISTRY, ["q24"]) == ["q24_minhash_neardup_pairs"]
+    full = "q24_minhash_neardup_pairs"
+    assert bench.select_queries(QUERY_REGISTRY, [full]) == [full]
+    assert bench.select_queries(QUERY_REGISTRY, ["q2"]) == []
+
+
+def test_perfbench_headline_is_bench_headline():
+    """perfbench/run.py fixes its own copy of the headline list; read
+    it without importing that module, so the two cannot drift."""
+    with open(os.path.join(REPO, "perfbench", "run.py")) as f:
+        tree = ast.parse(f.read())
+    (value,) = [
+        node.value
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "HEADLINE" for t in node.targets)
+    ]
+    assert list(ast.literal_eval(value)) == bench.HEADLINE

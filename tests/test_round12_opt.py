@@ -100,16 +100,16 @@ def test_sens_cascade_arm_equals_full_derivation(spark):
     )
     for j, k in ((4, 8), (8, 16)):
         # full (unpruned) arm
-        base_f, spans_f, rep_f = td._repeat_spans_arm(docs, "text", "doc_id", k)
+        base_f, spans_f, rep_f, _ = td._repeat_spans_arm(docs, "text", "doc_id", k)
         # cascaded arm: candidates from the j-arm's repeat positions
-        _, _, rep_j = td._repeat_spans_arm(docs, "text", "doc_id", j)
+        _, _, rep_j, _ = td._repeat_spans_arm(docs, "text", "doc_id", j)
         cand = rep_j.select(
             "doc_id",
             F.expr(
                 f"array_intersect(__ps, transform(__ps, p -> p - {j}))"
             ).alias("__ps"),
         ).filter(F.size("__ps") > 0)
-        base_c, spans_c, rep_c = td._repeat_spans_arm(
+        base_c, spans_c, rep_c, _ = td._repeat_spans_arm(
             docs, "text", "doc_id", k, cand
         )
         assert _rows(spans_c) == _rows(spans_f)
@@ -171,3 +171,20 @@ def test_ssjoin_auto_gate_double_estimate_dispatch(spark):
     pref = _rows(set_similarity_join(df, "sid", "item", 0.4, strategy="prefix"))
     cnt = _rows(set_similarity_join(df, "sid", "item", 0.4, strategy="count"))
     assert auto == pref == cnt and len(auto) > 0
+
+
+def test_q316_leaves_no_persistent_rdds(spark):
+    """q316 materializes one repeat relation per window arm; each is
+    released once nothing reads it, so the query leaves the session's
+    persistent-RDD registry as it found it."""
+    from team_aragon_spark.plans.star_queries import (
+        _SENS2_KS,
+        q316_substring_window_sensitivity,
+    )
+
+    def n_persistent_rdds() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = n_persistent_rdds()
+    assert len(q316_substring_window_sensitivity(spark, SF).collect()) == len(_SENS2_KS)
+    assert n_persistent_rdds() == before
