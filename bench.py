@@ -26,7 +26,7 @@ from typing import Iterable, Iterator, NamedTuple, Sequence
 from pyspark.sql import SparkSession
 
 from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-from team_aragon_spark.session import get_spark
+from team_aragon_spark.session import get_spark, query_scope
 
 # Headline set: one per workload family, weighted toward the shapes
 # that dominate at 100 TB (joins, window dedup, LSH dedup, ANN, events).
@@ -353,11 +353,9 @@ def time_queries(
     """Run each named query ``runs`` times to the noop sink and yield
     its :class:`Timing` as soon as it finishes.
 
-    The job description is the query name while its passes run.
-    Queries that persist() intermediates (LSH shingles, tf) leave their
-    lifetime to the caller, so the cache is cleared once after each
-    query's passes: repeated queries cannot accumulate executor-storage
-    pressure.
+    The job description is the query name while its passes run.  Each
+    query's passes run in one :func:`query_scope`, so what they
+    persisted or checkpointed is released before the next query.
     """
     sc = spark.sparkContext
     try:
@@ -365,11 +363,11 @@ def time_queries(
             fn = QUERY_REGISTRY[name].fn
             sc.setJobDescription(name)
             passes = []
-            for _ in range(runs):
-                t0 = time.monotonic()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                passes.append(round(time.monotonic() - t0, 3))
-            spark.catalog.clearCache()
+            with query_scope(spark):
+                for _ in range(runs):
+                    t0 = time.monotonic()
+                    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                    passes.append(round(time.monotonic() - t0, 3))
             yield Timing(name, tuple(passes))
     finally:
         sc.setJobDescription(None)

@@ -21,7 +21,7 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
 
     from bench import env_sf_dir, select_queries
-    from team_aragon_spark.session import get_spark
+    from team_aragon_spark.session import get_spark, query_scope
 
     sf_dir = env_sf_dir()
     spark = get_spark("plan-capture")
@@ -45,15 +45,15 @@ def main() -> None:
         short = name.split("_")[0]
         path = os.path.join(outdir, f"{short}_{tag}.txt")
         try:
-            df = QUERY_REGISTRY[name].fn(spark, sf_dir)
-            txt = df._jdf.queryExecution().explainString(mode)
+            with query_scope(spark):
+                df = QUERY_REGISTRY[name].fn(spark, sf_dir)
+                txt = df._jdf.queryExecution().explainString(mode)
         except Exception as exc:  # noqa: BLE001
             txt = f"ERROR {type(exc).__name__}: {exc}"
         with open(path, "w") as f:
             f.write(f"# {name} — explain('formatted'), {tag}, {sf_dir}\n")
             f.write(txt)
         print(f"{name} -> {path}", flush=True)
-        spark.catalog.clearCache()
 
 
 if __name__ == "__main__":

@@ -37,6 +37,7 @@ def main() -> None:
     import __spark_entry__ as e
     from bench import select_queries
     from oracle import compare, duck_connection
+    from team_aragon_spark.session import query_scope
 
     con = duck_connection(sf_dir)
     qs = e.queries()
@@ -46,17 +47,17 @@ def main() -> None:
     for name in names:
         t0 = time.monotonic()
         try:
-            df = qs[name](spark, sf_dir)
-            sql = sqls.get(name)
-            if sql:
-                ok, res = compare(df, con, sql)
-            else:
-                res, ok = f"rows-only {df.count()}", True
+            with query_scope(spark):
+                df = qs[name](spark, sf_dir)
+                sql = sqls.get(name)
+                if sql:
+                    ok, res = compare(df, con, sql)
+                else:
+                    res, ok = f"rows-only {df.count()}", True
         except Exception as exc:  # noqa: BLE001
             res, ok = f"ERR {type(exc).__name__}: {exc}", False
         n_fail += 0 if ok else 1
         print(f"{name}: {res} [{time.monotonic() - t0:.1f}s]", flush=True)
-        spark.catalog.clearCache()
     print(f"done: {len(names)} checked, {n_fail} failed")
     sys.exit(1 if n_fail else 0)
 

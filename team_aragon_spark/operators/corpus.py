@@ -65,10 +65,8 @@ def tfidf_top_terms(
     # tf feeds BOTH the scoring join and the document-frequency agg;
     # persist the (doc, term, tf) partial so the token explode+shuffle
     # runs once, not twice (it is the only corpus-sized stage here).
-    # Cache lifetime is caller-managed (lazy result — unpersisting here
-    # would defeat the reuse): long-running processes that invoke this
-    # repeatedly should spark.catalog.clearCache() between calls, as
-    # bench.py does.
+    # The lazy result still reads it, so the caller's
+    # session.query_scope releases it, not this function.
     tf = term_frequencies(df, text_col, id_col).persist()
     n_docs = df.select(F.count(F.lit(1)).alias("__n"))
     doc_freq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -221,9 +219,8 @@ def unigram_logprob_score(df: DataFrame, text_col: str = "text", id_col: str = "
     corpus-sized stage and is persisted across the two passes; the
     vocab side is vocabulary-sized (broadcastable).
 
-    Cache lifetime is caller-managed (see ``tfidf_top_terms``):
-    repeated invocations in one process should clearCache between
-    calls, as bench.py does.
+    The persisted tokens are released by the caller's
+    ``session.query_scope`` (see ``tfidf_top_terms``).
     """
     toks = (
         df.select(F.col(id_col), F.explode(F.expr(_tok(text_col))).alias("term"))

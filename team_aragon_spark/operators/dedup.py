@@ -71,7 +71,7 @@ def first_wins_dedup_agg(
 
 
 def split_new_vs_existing(
-    batch: DataFrame, existing: DataFrame, keys: Sequence[str], broadcast_existing: bool = False
+    batch: DataFrame, existing: DataFrame, keys: Sequence[str]
 ) -> tuple[DataFrame, DataFrame]:
     """(new_rows, duplicate_rows) for a batch vs. an already-loaded table.
 
@@ -81,8 +81,6 @@ def split_new_vs_existing(
     payload.
     """
     probe = existing.select(*keys).dropDuplicates(list(keys))
-    if broadcast_existing:
-        probe = F.broadcast(probe)
     on = list(keys)
     return batch.join(probe, on=on, how="left_anti"), batch.join(probe, on=on, how="left_semi")
 

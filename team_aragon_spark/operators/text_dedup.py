@@ -198,10 +198,8 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id", bands: in
     Cache contract: persists the banded-keys relation (tiny — ~24
     bytes x bands per doc) so the self-join does not re-derive the
     MinHash fold twice; the cache is NOT unpersisted here because the
-    returned DataFrame is lazy and still references it.  Lifetime is
-    caller-managed: ``spark.catalog.clearCache()`` (or ``unpersist()``
-    on the relation) after the result materializes — the bench harness
-    and tests clear per query.
+    returned DataFrame is lazy and still references it.  The caller's
+    :func:`team_aragon_spark.session.query_scope` releases it.
     """
     banded = banded_keys(signatures, id_col, bands).persist()
     # Persisted because the self-join below otherwise re-derives the
@@ -869,7 +867,7 @@ def _repeat_spans_arm(
     duplicate coverage (far smaller than the gram table), and the
     caller unpersists it once nothing reads it any more.  It is
     persisted rather than ``localCheckpoint``-ed because a local
-    checkpoint's RDD survives both ``unpersist()`` and
+    checkpoint survives both ``DataFrame.unpersist()`` and
     ``clearCache()``.
     """
     toks = f"split({text_col}, ' ')"
@@ -1027,12 +1025,9 @@ def exact_substring_spans(
     ``_repeat_spans``.
     """
     base, spans, occ = _repeat_spans(df, text_col, id_col, window)
-    # Scope the corpus-token-sized gram cache to this call (r10 review
-    # follow-up): materialize the merged span relation — bounded by
-    # removed-token islands, far smaller than the gram table — then
-    # drop the cache, so a full-registry sweep that never clearCaches
-    # between queries doesn't accumulate one gram cache per
-    # substring-family query in executor storage.
+    # Drop the corpus-token-sized gram cache as soon as the merged
+    # span relation (bounded by removed-token islands, far smaller) is
+    # materialized; only that checkpoint waits for the query_scope.
     spans = spans.localCheckpoint(eager=True)
     occ.unpersist()
     return _span_audit(base, spans, id_col)

@@ -27,7 +27,6 @@ from operator import and_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 @dataclass(frozen=True)
@@ -58,15 +57,13 @@ def validity_predicate(rules: list[RangeRule]) -> Column:
     return reduce(and_, (r.predicate() for r in rules), F.lit(True))
 
 
-def validation_split(df: DataFrame, rules: list[RangeRule], persist: bool = True) -> tuple[DataFrame, DataFrame]:
-    """Split into (valid, invalid) with one underlying scan.
+def validation_split(df: DataFrame, rules: list[RangeRule]) -> tuple[DataFrame, DataFrame]:
+    """Split into (valid, invalid); persist ``df`` first to scan it once.
 
     ``invalid`` is the exact complement: rows failing >=1 rule.  Because
     each rule's predicate is null-safe (never NULL), plain negation is
     correct here.
     """
-    if persist:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
     pred = validity_predicate(rules)
     return df.filter(pred), df.filter(~pred)
 

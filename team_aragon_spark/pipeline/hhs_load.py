@@ -81,7 +81,7 @@ def _load_hhs_batch(spark: SparkSession, csv_path: str, store: ParquetStore, qua
     cleaned = clean_hhs(read_hhs_csv(spark, csv_path)).persist(StorageLevel.MEMORY_AND_DISK)
 
     rules = non_negative_rules(HHS_BED_METRIC_COLS)
-    valid, invalid = validation_split(cleaned, rules, persist=False)
+    valid, invalid = validation_split(cleaned, rules)
     valid = valid.persist(StorageLevel.MEMORY_AND_DISK)
 
     table_rows: dict[str, int] = {}

@@ -14,6 +14,8 @@ Scale posture (100 TB / 1000-executor design, tested on local[*]):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -37,25 +39,47 @@ RUNTIME_CONF = {
 }
 
 
-def get_spark(app_name: str = "team-aragon-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def default_driver_memory() -> str:
+    """Half the host RAM in whole GiB, 1g-24g: local mode runs the whole
+    engine in this ONE JVM heap (8g starved 32 tasks on 100x inputs into
+    GC-locker OOM); the rest is for the Python workers and the OS."""
+    gib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**30
+    return f"{min(24, max(1, gib // 2))}g"
+
+
+def get_spark(app_name: str = "team-aragon-spark") -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults."""
-    cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        # local mode runs driver + all executor threads in ONE JVM, so
-        # this heap is the entire engine's memory; 8g starved 32
-        # concurrent tasks on scaled (100x) inputs into GC-locker OOM.
-        # Sized for the 128 GiB box; on a real cluster executor memory
-        # is set by the deploy config, not here.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .master(os.environ.get("SPARK_MASTER", f"local[{default_parallelism()}]"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def query_scope(spark: SparkSession) -> Iterator[SparkSession]:
+    """The one place where query-run storage is released.
+
+    Enclose a query's run AND the consumption of its lazy result, which
+    still reads what the query persisted or checkpointed.  On exit:
+    ``clearCache()``, then unpersist every RDD that became persistent
+    inside the scope (local checkpoints, ``rdd.cache()``); other RDDs
+    persistent before entry survive.  Non-blocking, like ``clearCache()``.
+    """
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    try:
+        yield spark
+    finally:
+        spark.catalog.clearCache()
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(False)
 
 
 def ensure_parallelism(df, min_partitions: int | None = None):

@@ -15,7 +15,7 @@ import pytest
 # item 2).  setdefault, so an externally-set SPARK_GRAFT_CPUS wins.
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
-from team_aragon_spark.session import get_spark
+from team_aragon_spark.session import get_spark, query_scope
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
@@ -23,6 +23,18 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("team-aragon-tests", shuffle_partitions=8)
+    # shuffle partitions follow SPARK_GRAFT_CPUS (session.RUNTIME_CONF)
+    s = get_spark("team-aragon-tests")
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _query_scope(request):
+    """Each test that uses ``spark`` runs in one ``query_scope``; the
+    others start no JVM."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    with query_scope(request.getfixturevalue("spark")):
+        yield

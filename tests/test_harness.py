@@ -1,5 +1,6 @@
 """The one query-timing harness: bench.py's ``time_queries`` and
-``select_queries``, and the ``scripts/time_queries.py`` CLI over them."""
+``select_queries``, the ``scripts/time_queries.py`` CLI over them, and
+the ``session.query_scope`` that releases each query's storage."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import pytest
 from conftest import SF_SMOKE
 
 from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
+from team_aragon_spark.session import query_scope
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -36,6 +38,31 @@ def test_time_queries_cold_is_first_pass_steady_is_min(spark):
     assert t.steady == min(t.passes) <= t.cold
     # the job description is the query name only while its passes run
     assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
+def test_query_scope_releases_only_what_it_saw_materialized(spark):
+    """A DataFrame persist and both local-checkpoint forms go on exit
+    (``clearCache()`` alone misses the checkpoints); an RDD cached
+    before entry stays."""
+    jsc = spark.sparkContext._jsc
+    kept = spark.sparkContext.parallelize(range(8)).cache()
+    assert kept.sum() == 28
+    before = set(jsc.getPersistentRDDs().keySet())
+    with query_scope(spark):
+        assert spark.range(10).persist().count() == 10
+        spark.range(11).localCheckpoint(eager=True)
+        assert spark.range(12).localCheckpoint(eager=False).count() == 12
+        assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 3
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+
+
+def test_time_queries_leaves_no_persistent_rdds(spark):
+    """q181's BFS checkpoints its frontier each hop; clearing the cache
+    after the passes left those checkpoints behind."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert len(list(bench.time_queries(spark, ["q181_copurchase_bfs_hops"], SF_SMOKE, runs=1))) == 1
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 @pytest.mark.parametrize(

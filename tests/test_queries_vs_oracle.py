@@ -84,7 +84,6 @@ def test_lsh_recall_is_total_on_current_corpus(spark):
         if (a % 5 == 4) != (b % 5 == 4)
     }
     assert cross <= inc, f"incremental LSH missed cross pairs: {cross - inc}"
-    spark.catalog.clearCache()
 
 
 def test_q70_empty_is_correct_vs_brute_force(spark):
@@ -176,7 +175,6 @@ def test_ahash_planted_image_dups_collide(spark):
         assert by_doc[i].ahash == by_doc[j].ahash, (i, j)
         assert by_doc[i].rep_id == by_doc[j].rep_id, (i, j)
         assert by_doc[i].cluster_size >= 2, (i, j)
-    spark.catalog.clearCache()
 
 
 def test_hashed_shingles_collision_free_on_current_corpus(spark):

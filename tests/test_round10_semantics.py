@@ -120,7 +120,6 @@ def test_q316_coverage_monotone_in_window(spark):
         ).collect(),
         key=lambda r: r["window_k"],
     )
-    spark.catalog.clearCache()
     assert [r["window_k"] for r in rows] == list(sq._SENS2_KS)
     assert len({r["total_tokens"] for r in rows}) == 1
     for a, b in zip(rows, rows[1:]):
@@ -143,7 +142,6 @@ def test_q317_funnel_conservation(spark):
             spark, SF_SMOKE
         ).collect()
     }
-    spark.catalog.clearCache()
     assert sum(r["tokens_clean"] for r in rows) == sum(
         v["n_kept_tokens"] for v in per_doc.values()
     )
@@ -161,7 +159,6 @@ def test_q312_conservation_and_dominated_rule(spark):
     nobody."""
     df = sq.QUERY_REGISTRY["q312_semantic_dedup"].fn(spark, SF_SMOKE)
     rows = df.collect()
-    spark.catalog.clearCache()
     n = len(rows)
     kept = [r for r in rows if r["kept"]]
     pruned = [r for r in rows if not r["kept"]]
@@ -187,7 +184,6 @@ def test_q318_arrow_twin_equals_q312(spark):
         map(tuple, sq.QUERY_REGISTRY["q318_semantic_dedup_arrow"].fn(
             spark, SF_SMOKE).collect())
     )
-    spark.catalog.clearCache()
     assert a == b
 
 
@@ -229,7 +225,6 @@ def test_arrow_kernels_blocked_exact(spark):
             asg, sq._SEMDD_T, member_block=3).collect())
     )
     assert pb == ps
-    spark.catalog.clearCache()
 
 
 def test_q319_good_turing_identities(spark):
@@ -239,7 +234,6 @@ def test_q319_good_turing_identities(spark):
     rows = sq.QUERY_REGISTRY["q319_good_turing_unseen_mass"].fn(
         spark, SF_SMOKE
     ).collect()
-    spark.catalog.clearCache()
     assert [r["r"] for r in rows] == list(range(1, sq._GT_MAX_R + 1))
     total = rows[0]["total_tokens"]
     n1 = rows[0]["n_r"]
@@ -266,7 +260,6 @@ def test_q320_attribution_accounts_every_repeat(spark):
     rows = sq.QUERY_REGISTRY["q320_boilerplate_source_attribution"].fn(
         spark, SF_SMOKE
     ).collect()
-    spark.catalog.clearCache()
     assert sum(r["n_occurrences"] for r in rows) == expected
     assert all(1 <= r["n_grams"] <= r["n_occurrences"] for r in rows)
 
@@ -280,7 +273,6 @@ def test_q313_funnel_monotonicity(spark):
     rows = sq.QUERY_REGISTRY["q313_quality_ensemble_gate"].fn(
         spark, SF_SMOKE
     ).collect()
-    spark.catalog.clearCache()
     assert rows, "gate produced no sources"
     for r in rows:
         n = r["n_docs"]
@@ -311,7 +303,6 @@ def test_q314_gate_branches_equal_q246(spark, monkeypatch):
     spark.catalog.clearCache()
     monkeypatch.setattr(sq, "_LPA_BCAST_MAX_NODES", 0)
     shuffled = _rows(fn314(spark, SF_SMOKE))
-    spark.catalog.clearCache()
     assert shuffled == bcast
 
 
@@ -368,4 +359,3 @@ def test_q314_vote_join_physical_strategy(spark):
     assert "BroadcastHashJoin" in pb
     assert "SortMergeJoin" not in pb
     assert "SortMergeJoin" in ps
-    spark.catalog.clearCache()

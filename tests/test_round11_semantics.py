@@ -47,7 +47,6 @@ def test_q321_equals_q311_restricted_to_batch(spark):
             spark, SF_SMOKE
         )
     )
-    spark.catalog.clearCache()
     assert inc == ref
     assert inc, "batch partition must be non-empty for the pin to bite"
 
@@ -78,7 +77,6 @@ def test_q322_equals_q315_restricted_to_batch_and_q321_identity(spark):
         .fn(spark, SF_SMOKE)
         .collect()
     }
-    spark.catalog.clearCache()
     assert removed == audit
 
 
@@ -108,7 +106,6 @@ def test_q321_batch_first_occurrence_of_indexed_gram_repeats(spark):
             idx, batch_docs, window=4
         ).collect()
     }
-    spark.catalog.clearCache()
     assert got == {10: (4, 4), 11: (8, 0), 12: (4, 4)}
 
 
@@ -144,7 +141,6 @@ def test_exact_substring_gram_index_parquet_roundtrip(spark, tmp_path):
             window=8,
         )
     )
-    spark.catalog.clearCache()
     assert got == ref
     assert got, "round-trip pin must compare non-empty audits"
 
@@ -172,7 +168,6 @@ def test_lsh_banded_index_parquet_roundtrip(spark, tmp_path):
             None, batch_sigs, index_keys=stored_keys
         )
     )
-    spark.catalog.clearCache()
     assert got == ref
 
 
@@ -236,7 +231,6 @@ def test_bucketed_gram_index_probe_shuffles_batch_side_only(spark):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS substr_gram_index_b")
-        spark.catalog.clearCache()
 
 
 def test_gram_index_maintenance_replay_idempotent(spark, tmp_path):
@@ -288,7 +282,6 @@ def test_gram_index_maintenance_replay_idempotent(spark, tmp_path):
             oneshot, batch_docs, window=8
         )
     )
-    spark.catalog.clearCache()
     assert got == ref and got
 
 
@@ -319,7 +312,6 @@ def test_gram_index_retry_after_partial_write_loses_nothing(spark, tmp_path):
     maintained = store.read(spark, "gidx").select("gk").distinct()
     oneshot = text_dedup.exact_substring_gram_index(docs, window=8)
     assert _rows(maintained) == _rows(oneshot), "partial digests lost on retry"
-    spark.catalog.clearCache()
 
 
 def test_q326_kneser_ney_hand_computed_toy(spark):

@@ -103,7 +103,6 @@ def test_delta_join_ivm_quadrants_planted(spark, tmp_path_factory):
         .fn(spark, d)
         .collect()
     }
-    spark.catalog.clearCache()
     assert got == {
         (1, 1, 2, "old"),
         (2, 3, 4, "dc"),
@@ -151,7 +150,6 @@ def test_seasonal_anomaly_planted_spike(spark, tmp_path_factory):
         eid += 1
     d = _stage_events(spark, tmp_path_factory, rows, "spike")
     out = QUERY_REGISTRY["q171_seasonal_residual_anomaly"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     flagged = {(r.event_type, r.hour) for r in out if r.is_anomaly == 1}
     assert flagged == {
         ("click", base_t + datetime.timedelta(days=5, hours=3))
@@ -191,7 +189,6 @@ def test_cms_join_size_one_sided_and_exact_when_collision_free(
         rows.append((eid, base_t, 7, "purchase", 0.0, "{}")); eid += 1
     d = _stage_events(spark, tmp_path_factory, rows, "cms_one")
     got = QUERY_REGISTRY["q173_join_size_cms_estimate"].fn(spark, d).collect()[0]
-    spark.catalog.clearCache()
     assert (got.exact_join_size, got.cms_estimate, got.overestimate) == (
         12, 12, 0
     )
@@ -287,7 +284,6 @@ def test_ann_recall_is_total_on_separable_clusters(
     )
     d = _stage_table(spark, tmp_path_factory, emb, "embeddings", "annrec")
     out = QUERY_REGISTRY["q175_ann_recall_audit"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     assert len(out) == 24
     assert all(r.recall == 1.0 for r in out)
     # 2 probed cells x (1 centroid + 14 members) minus self
@@ -313,7 +309,6 @@ def test_table_stats_null_semantics_planted(spark, tmp_path_factory):
         r.column_name: r
         for r in QUERY_REGISTRY["q174_table_stats_one_pass"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     p = got["props"]
     assert (p.n_rows, p.n_nulls, p.ndv) == (7, 2, 3)
     assert (p.min_val, p.max_val) == ("a", "c")
@@ -333,7 +328,6 @@ def test_ols_perfect_line_planted(spark, tmp_path_factory):
     ]
     d = _stage_events(spark, tmp_path_factory, rows, "ols_line")
     out = QUERY_REGISTRY["q178_grouped_ols_regression"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     assert len(out) == 1
     r = out[0]
     assert (r.n, r.slope, r.intercept, r.r2) == (24, 3.0, 10.0, 1.0)
@@ -355,7 +349,6 @@ def test_time_decay_exact_half_life_planted(spark, tmp_path_factory):
         r.user_id: (r.n_events, r.decayed_activity, r.decayed_purchases)
         for r in QUERY_REGISTRY["q179_time_decay_engagement"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert got[1] == (3, 1.75, 1.0)   # 1 + 0.5 + 0.25
     assert got[2] == (1, 1.0, 0.0)
 
@@ -460,7 +453,6 @@ def test_autocorrelation_constant_null_and_alternating_exact(
         .fn(spark, d)
         .collect()
     }
-    spark.catalog.clearCache()
     assert got[("RA", 1)] is None and got[("RA", 7)] is None
     assert got[("RB", 1)] == -1.0
     assert got[("RB", 2)] == 1.0
@@ -520,7 +512,6 @@ def test_kmv_exact_below_k_and_union_merge(spark, tmp_path_factory):
         "kmv",
     )
     out = QUERY_REGISTRY["q180_kmv_distinct_sketch"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     by = {(r.a, r.b): r for r in out}
     assert by[("sA", "sA")].exact_ndv == 4
     assert by[("sB", "sB")].exact_ndv == 3
@@ -675,7 +666,6 @@ def test_kcore_planted_cascade_and_corpus_convergence(
     from tests.conftest import SF_SMOKE
 
     rows = QUERY_REGISTRY["q186_copurchase_kcore"].fn(spark, SF_SMOKE).collect()
-    spark.catalog.clearCache()
     removal_rounds = [r.round for r in rows if r.round > 0]
     assert len(removal_rounds) < _KCORE_ROUNDS
 
@@ -709,7 +699,6 @@ def test_phrase_search_positions_and_tiebreak(spark, tmp_path_factory):
         .fn(spark, d)
         .collect()
     }
-    spark.catalog.clearCache()
     assert got == {
         1: ("x y", 2, 1),
         2: ("x y", 1, 1),
@@ -750,7 +739,6 @@ def test_peak_concurrency_boundary_conventions(spark, tmp_path_factory):
         .fn(spark, d)
         .collect()
     }
-    spark.catalog.clearCache()
     epoch = datetime.date(1970, 1, 1)
     d1 = (datetime.date(2024, 1, 1) - epoch).days
     assert got[d1] == (2, 4)
@@ -793,7 +781,6 @@ def test_association_rules_hand_computed(spark, tmp_path_factory):
         .fn(spark, d)
         .collect()
     }
-    spark.catalog.clearCache()
     # part 1 in orders {100,101,102} (c=3); part 2 in {100,101,103}
     # (c=3); part 3 in {101,102} (c=2); N=5
     assert got[(1, 2)] == (2, round(2 / 3, 6), round(2 / 3, 6),
@@ -833,7 +820,6 @@ def test_greedy_coverage_marginal_not_total(spark, tmp_path_factory):
         .fn(spark, d)
         .collect()
     ]
-    spark.catalog.clearCache()
     assert got[0] == (1, 1, 4, 4)
     assert got[1] == (2, 3, 2, 6)
     # after round 2 every token is covered -> doc 2's marginal is 0,
@@ -1002,7 +988,6 @@ def test_hits_planted_bipartite_matrix(spark, tmp_path_factory):
         a = {p: sum(h[c] for c in custs if (c, p) in adj) for p in parts}
         h = {c: sum(a[p] for p in parts if (c, p) in adj) for c in custs}
     got = QUERY_REGISTRY["q194_bipartite_hits"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     got_a = {r.id: (r.score, r.norm_score) for r in got if r.role == "authority"}
     got_h = {r.id: (r.score, r.norm_score) for r in got if r.role == "hub"}
     ma, mh = max(a.values()), max(h.values())
@@ -1044,7 +1029,6 @@ def test_pmi_planted_always_together_pair(spark, tmp_path_factory):
         (r.a, r.b): (r.n_pair, r.pmi)
         for r in QUERY_REGISTRY["q195_pmi_collocations"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     t_total = 32  # 16 docs x 2 tokens
     assert got[("new", "york")] == (
         5,
@@ -1549,7 +1533,6 @@ def test_negative_sampling_pure_python_replay(spark, tmp_path_factory):
         (r.user_id, r.j, r.neg_partkey)
         for r in QUERY_REGISTRY["q210_negative_sampling"].fn(spark, d).collect()
     ]
-    spark.catalog.clearCache()
     assert got == expected
     assert all(pk not in purchased for _, _, pk in got)
 
@@ -1571,7 +1554,6 @@ def test_assortativity_star_is_minus_one(spark, tmp_path_factory):
         "assort",
     )
     got = QUERY_REGISTRY["q211_degree_assortativity"].fn(spark, d).collect()[0]
-    spark.catalog.clearCache()
     assert got.n_edges == 3
     assert got.assortativity == -1.0
 
@@ -1624,7 +1606,6 @@ def test_markov_heldout_hand_computed(spark, tmp_path_factory):
     ]
     d = _stage_events(spark, tmp_path_factory, rows, "markov")
     got = QUERY_REGISTRY["q213_markov_heldout_accuracy"].fn(spark, d).collect()[0]
-    spark.catalog.clearCache()
     assert (got.n_train, got.n_test) == (4, 3)
     assert got.markov_accuracy == round(2 / 3, 6)
     assert got.baseline_accuracy == round(1 / 3, 6)
@@ -1731,7 +1712,6 @@ def test_link_prediction_square_graph(spark, tmp_path_factory):
         .fn(spark, d)
         .collect()
     ]
-    spark.catalog.clearCache()
     assert got == [(1, 4, 2, 1.0), (2, 3, 2, 1.0)]
 
 
@@ -1763,7 +1743,6 @@ def test_calibration_bins_hand_computed(spark, tmp_path_factory):
         r.bin: (r.n, r.mean_confidence, r.observed_accuracy, r.calibration_gap)
         for r in QUERY_REGISTRY["q217_prediction_calibration"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     conf = round(2 / 3, 6)
     assert got[6] == (2, conf, 0.5, round(2 / 3 - 0.5, 6))
     assert got[9] == (1, 1.0, 1.0, 0.0)
@@ -1949,7 +1928,6 @@ def test_wasserstein_one_bin_shift_and_zero(spark, tmp_path_factory):
         r.event_type: (r.n_first_half, r.n_second_half, r.w1_distance)
         for r in QUERY_REGISTRY["q223_wasserstein_value_drift"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert got["click"] == (2, 2, 8.0)
     assert got["view"] == (1, 1, 0.0)
 
@@ -2197,7 +2175,6 @@ def test_misra_gries_query_equals_brute_force(spark, tmp_path_factory):
         (r.term, r.cnt)
         for r in QUERY_REGISTRY["q231_misra_gries_heavy_hitters"].fn(spark, d).collect()
     ]
-    spark.catalog.clearCache()
     # 160 tokens total; threshold n/300 < 1 token, so EVERY distinct
     # term with cnt*300 > 160 qualifies -> brute force = all terms
     # with cnt >= 1; sharpen by checking against explicit counts.
@@ -2222,7 +2199,6 @@ def test_llr_keywords_enrichment_gate_and_value(spark, tmp_path_factory):
         "llr",
     )
     rows = QUERY_REGISTRY["q232_llr_keywords"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     by_src = {}
     for r in rows:
         by_src.setdefault(r.source, []).append(r)
@@ -2271,7 +2247,6 @@ def test_spearman_monotone_ties_and_nonlinearity(spark, tmp_path_factory):
         (r.var_x, r.var_y): (r.n, r.spearman_rho)
         for r in QUERY_REGISTRY["q233_spearman_corr"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     # hand-computed with average ranks [1.5, 1.5, 3] vs [1, 2, 3]:
     # rho = 4.5 / sqrt(4.5 * 6) = 0.866025
     assert got[("l_quantity", "l_discount")] == (3, 0.866025)
@@ -2352,7 +2327,6 @@ def test_langid_prf1_hand_computed(spark, tmp_path_factory):
         r.lang: (r.n_true, r.n_pred, r.tp, r.precision, r.recall, r.f1)
         for r in QUERY_REGISTRY["q236_langid_prf1"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert got["en"] == (2, 3, 2, 0.666667, 1.0, 0.8)
     assert got["de"] == (1, 0, 0, 0.0, 0.0, 0.0)
 
@@ -2386,7 +2360,6 @@ def test_weighted_sssp_relay_beats_direct_edge(spark, tmp_path_factory):
         (r.partkey, r.dist)
         for r in QUERY_REGISTRY["q237_weighted_shortest_path"].fn(spark, d).collect()
     )
-    spark.catalog.clearCache()
     assert rows == [(1, 0), (4, 7), (5, 3)]
 
 
@@ -2410,7 +2383,6 @@ def test_mutual_nn_kills_asymmetric_hub_match(spark, tmp_path_factory):
         (r.a, r.b, r.cosine)
         for r in QUERY_REGISTRY["q238_mutual_nn_pairs"].fn(spark, d).collect()
     ]
-    spark.catalog.clearCache()
     assert rows == [(1, 2, 0.995)]  # 1/sqrt(1.01) rounded at 4
 
 
@@ -2479,7 +2451,6 @@ def test_rec_hitk_leave_last_out_and_novelty(spark, tmp_path_factory):
         "rec",
     )
     r = QUERY_REGISTRY["q240_popularity_rec_hitk"].fn(spark, d).collect()[0]
-    spark.catalog.clearCache()
     assert (r.n_customers, r.hits_at_1, r.hits_at_10) == (3, 2, 2)
     assert (r.hit_rate_1, r.hit_rate_10) == (0.666667, 0.666667)
 
@@ -2539,7 +2510,6 @@ def test_path_taxonomy_ranks_and_distances(spark, tmp_path_factory):
         (r.rank_a, r.rank_b): (r.path_a, r.path_b, r.edit_dist)
         for r in QUERY_REGISTRY["q242_session_path_taxonomy"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert got[(1, 2)] == ("view", "view>click", 6)
     assert got[(1, 3)] == ("view", "view>click>purchase", 15)
     assert got[(2, 3)] == ("view>click", "view>click>purchase", 9)
@@ -2645,7 +2615,6 @@ def test_lpa_two_cliques_with_bridge(spark, tmp_path_factory):
         .fn(spark, d)
         .collect()
     }
-    spark.catalog.clearCache()
     assert got == {1: 3, 3: 3}
 
 
@@ -2666,7 +2635,6 @@ def test_ams_single_key_is_exact(spark, tmp_path_factory):
         "ams",
     )
     rows = QUERY_REGISTRY["q247_ams_f2_sketch"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     got = {r.col: (r.n_keys, r.exact_f2, r.est_f2, r.rel_err) for r in rows}
     assert got["l_partkey"] == (1, 25, 25.0, 0.0)
     assert got["l_suppkey"] == (1, 25, 25.0, 0.0)
@@ -2694,7 +2662,6 @@ def test_er_scoring_smoothing_and_ordering(spark, tmp_path_factory):
         "ers",
     )
     rows = QUERY_REGISTRY["q248_entity_resolution_scoring"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     assert [(r.a, r.b) for r in rows] == [(1, 2), (1, 3), (2, 3)]
     scores = {(r.a, r.b): r.fs_score for r in rows}
     assert all(math.isfinite(s) for s in scores.values())
@@ -2718,7 +2685,6 @@ def test_watermark_audit_planted_lateness(spark, tmp_path_factory):
     ]
     d = _stage_events(spark, tmp_path_factory, rows, "wmaudit")
     r = QUERY_REGISTRY["q249_watermark_delay_audit"].fn(spark, d).collect()[0]
-    spark.catalog.clearCache()
     assert (r.event_type, r.n, r.n_late, r.max_late_ms) == ("click", 5, 2, 2000)
     assert (r.p50_late_ms, r.p95_late_ms, r.p99_late_ms) == (0.0, 1800.0, 1960.0)
 
@@ -2749,7 +2715,6 @@ def test_seasonal_decomposition_perfect_period(spark, tmp_path_factory):
         .fn(spark, d)
         .collect()
     )
-    spark.catalog.clearCache()
     assert sum(r.n_days for r in rows) == 15
     for r in rows:
         assert r.seasonal == float(r.dow7 - 3), r
@@ -2791,7 +2756,6 @@ def test_spatial_radius_join_boundary_equals_brute_force(
         (r.a, r.b): r.dist
         for r in QUERY_REGISTRY["q251_spatial_radius_join"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     pts = {
         vid: (round(f32(x), 6), round(f32(y), 6))
         for vid, (x, y) in coords.items()
@@ -2832,7 +2796,6 @@ def test_ann_ndcg_is_one_on_separable_clusters(spark, tmp_path_factory):
     )
     d = _stage_table(spark, tmp_path_factory, emb, "embeddings", "ndcg")
     out = QUERY_REGISTRY["q252_ann_ndcg_eval"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     assert len(out) == 24
     idcg = sum((11 - i) / math.log2(i + 1) for i in range(1, 11))
     for r in out:
@@ -2891,7 +2854,6 @@ def test_woe_pure_category_stays_finite(spark, tmp_path_factory):
         (r.feature, r.category): (r.n, r.n_pos, r.woe, r.iv_term)
         for r in QUERY_REGISTRY["q254_woe_feature_encoding"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
 
     def woe_iv(n, pos, pt, nt):
         ps, ns = (pos + 0.5) / pt, (n - pos + 0.5) / nt
@@ -2934,7 +2896,6 @@ def test_encoding_advisor_runs_and_gates(spark, tmp_path_factory):
         r.col: (r.n, r.ndv, r.n_runs, r.avg_run_len, r.entropy, r.encoding)
         for r in QUERY_REGISTRY["q255_column_encoding_advisor"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     ln2 = round(math.log(2), 6)
     assert got["returnflag"] == (8, 1, 2, 4.0, 0.0, "RLE")
     assert got["shipday"] == (8, 1, 2, 4.0, 0.0, "RLE")
@@ -2960,7 +2921,6 @@ def test_knn_loo_flags_mislabeled_vector(spark, tmp_path_factory):
         r.label: (r.n, r.n_correct, r.accuracy)
         for r in QUERY_REGISTRY["q256_knn_loo_classifier_eval"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert got[0] == (11, 11, 1.0)
     assert got[1] == (13, 12, round(12 / 13, 4))
 
@@ -3014,7 +2974,6 @@ def test_pca_axis_aligned_variance(spark, tmp_path_factory):
         r.dim: (r.loading, r.eigval)
         for r in QUERY_REGISTRY["q258_power_iteration_pca"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert got[0] == (1.0, 8.25)
     assert all(got[i] == (0.0, 8.25) for i in range(1, dim))
 
@@ -3054,7 +3013,6 @@ def test_simpson_reversal_planted(spark, tmp_path_factory):
         r.segment: (r.stratum_sign, r.pooled_sign, r.reversed)
         for r in QUERY_REGISTRY["q259_simpsons_paradox_screen"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert got["SEG1"] == (1, -1, 1)
     assert got["SEG2"] == (1, -1, 1)
 
@@ -3082,7 +3040,6 @@ def test_retention_triangle_hand_counts(spark, tmp_path_factory):
     ev(4, 1)
     d = _stage_events(spark, tmp_path_factory, rows, "ret")
     out = QUERY_REGISTRY["q260_cohort_retention_triangle"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     w0 = min(r.cohort_week for r in out)
     got = {
         (r.cohort_week - w0, r.offset_w): (r.cohort_size, r.n_active, r.retention)
@@ -3125,7 +3082,6 @@ def test_weiszfeld_replication_and_coincident_guard(
         r.label: (r.n, r.med_x, r.med_y, r.mean_dist)
         for r in QUERY_REGISTRY["q261_geometric_median_weiszfeld"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert got[0] == (4, 0.25, 0.25, 0.0)
 
     p1 = [(round(f32(x), 6), round(f32(y), 6)) for x, y in pts1]
@@ -3196,7 +3152,6 @@ def test_trending_rank_shifts_hand_weeks(spark, tmp_path_factory):
         "trend",
     )
     out = QUERY_REGISTRY["q263_weekly_trending_parts"].fn(spark, d).collect()
-    spark.catalog.clearCache()
     w0 = min(r.weekno for r in out)
     got = {
         (r.weekno - w0, r.rnk): (r.l_partkey, r.n_orders, r.prev_rnk, r.rank_delta)
@@ -3243,7 +3198,6 @@ def test_knn_ivf_twin_matches_brute_on_separable_clusters(
         r.label: (r.n, r.accuracy)
         for r in QUERY_REGISTRY["q256_knn_loo_classifier_eval"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert set(fast) == set(brute)
     for lbl, (n, acc, cands) in fast.items():
         assert (n, acc) == brute[lbl]
@@ -3270,7 +3224,6 @@ def test_gap_audit_bucket_boundaries(spark, tmp_path_factory):
         (r.gap_start, r.gap_end, r.gap_len)
         for r in QUERY_REGISTRY["q265_orderkey_gap_audit"].fn(spark, d).collect()
     ]
-    spark.catalog.clearCache()
     assert got == [
         (6, 4094, 4089),
         (5001, 8999, 3999),
@@ -3312,6 +3265,5 @@ def test_lead_time_negative_flag_and_percentiles(spark, tmp_path_factory):
                      r.n_negative)
         for r in QUERY_REGISTRY["q266_fulfillment_lead_time"].fn(spark, d).collect()
     }
-    spark.catalog.clearCache()
     assert got["1-URGENT"] == (5, 1, 3.0, 80.8, 100, 0)
     assert got["2-HIGH"] == (1, -1, -1.0, -1.0, -1, 1)

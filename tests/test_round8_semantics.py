@@ -22,7 +22,6 @@ def test_knn_arrow_twin_equals_jvm_twin(spark):
     b = QUERY_REGISTRY["q270_knn_ivf_loo_arrow"].fn(spark, SF_SMOKE)
     only_a = a.exceptAll(b).collect()
     only_b = b.exceptAll(a).collect()
-    spark.catalog.clearCache()
     assert not only_a and not only_b, (only_a, only_b)
 
 
@@ -33,7 +32,6 @@ def test_knn_arrow_twin_plan_shape(spark):
     the candidate set never persists (only base/winner relations)."""
     df = QUERY_REGISTRY["q270_knn_ivf_loo_arrow"].fn(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    spark.catalog.clearCache()
     assert "FlatMapCoGroupsInPandas" in plan, plan
     assert "MapInPandas" in plan, plan
     assert "CartesianProduct" not in plan

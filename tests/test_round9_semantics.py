@@ -25,7 +25,6 @@ def test_q248_prefix_escalation_exact(spark, monkeypatch):
     spark.catalog.clearCache()
     monkeypatch.setattr(sq, "_ER_PREFIX0", 4)
     tiny = [tuple(r) for r in fn(spark, SF_SMOKE).collect()]
-    spark.catalog.clearCache()
     assert tiny == full
     assert len(full) == sq._ER_TOPK
 
@@ -43,7 +42,6 @@ def test_cell_knn_arrow_query_block_exact(spark):
     small = similarity.cell_knn_topk_arrow(asg, p2, k=sq._KNN_K, query_block=3)
     assert big.exceptAll(small).count() == 0
     assert small.exceptAll(big).count() == 0
-    spark.catalog.clearCache()
 
 
 def test_q274_sample_is_fixed_size_prefix(spark):
@@ -56,7 +54,6 @@ def test_q274_sample_is_fixed_size_prefix(spark):
     ra = [tuple(r) for r in a.orderBy("threshold").collect()]
     spark.catalog.clearCache()
     rb = [tuple(r) for r in b.orderBy("threshold").collect()]
-    spark.catalog.clearCache()
     assert ra == rb
 
 
@@ -144,4 +141,3 @@ def test_cluster_aware_split_has_no_leakage(spark):
     assert all(r.split_pair.split("|")[0] == r.split_pair.split("|")[1]
                for r in rows)
     assert abs(sum(r.pair_share for r in rows) - 1.0) < 1e-6
-    spark.catalog.clearCache()

@@ -437,7 +437,6 @@ def test_label_centroids_reads_corpus_once(spark):
     ), plan
     # and the cache actually materializes (runtime single corpus read)
     assert out.count() == 1
-    df.sparkSession.catalog.clearCache()
 
 
 def test_packing_window_is_sharded(spark):
@@ -462,7 +461,6 @@ def test_packing_window_is_sharded(spark):
     assert doc_windows, plan
     for ln in doc_windows:
         assert "__shard" in ln, ln
-    spark.catalog.clearCache()
 
 
 def test_packing_prefix_sum_matches_naive_on_skew(spark):
@@ -517,7 +515,6 @@ def test_packing_prefix_sum_matches_naive_on_skew(spark):
     )
     hot_max = max(r["count"] for r in sizes.filter("source = 'commoncrawl'").collect())
     assert hot_max <= 2 * (n_hot // n_shards), hot_max
-    spark.catalog.clearCache()
 
 
 def test_first_wins_dedup_aggregates_map_side(spark):
@@ -877,7 +874,6 @@ def test_iterative_and_divergence_query_plan_shapes(spark):
     # scans or the iteration join tower at all.
     assert "Scan ExistingRDD" in p132, p132
     assert "lineitem" not in p132 and "orders" not in p132, p132
-    spark.catalog.clearCache()
 
 
 def test_salted_topk_per_group_matches_naive_on_skew(spark):
@@ -955,7 +951,6 @@ def test_analytics_batch_plan_shapes(spark):
 
     p145 = plan("q145_dau_wau_stickiness")
     assert "InMemoryTableScan" in p145, "day-user relation must be cached"
-    spark.catalog.clearCache()
 
     for name in ("q146_period_contribution", "q148_zonemap_skipping_audit"):
         pl = plan(name)
@@ -1643,7 +1638,6 @@ def test_round7_batch13_plan_shapes(spark):
             QUERY_REGISTRY[name].fn(spark, sf)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        spark.catalog.clearCache()
         return p
 
     p221 = plan("q221_point_in_time_feature_join")
@@ -1678,7 +1672,6 @@ def test_round7_batch14_plan_shapes(spark):
             QUERY_REGISTRY[name].fn(spark, sf)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        spark.catalog.clearCache()
         return p
 
     for name in (
@@ -1892,7 +1885,6 @@ def test_round7_batch20_plan_shapes(spark):
             QUERY_REGISTRY[name].fn(spark, sf)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        spark.catalog.clearCache()
         return p
 
     p241 = plan("q241_holt_trend_forecast")
@@ -1990,7 +1982,6 @@ def test_round7_batch22_plan_shapes(spark):
             QUERY_REGISTRY[name].fn(spark, sf)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        spark.catalog.clearCache()
         return p
 
     p249 = plan("q249_watermark_delay_audit")
@@ -2035,7 +2026,6 @@ def test_round7_batch23_plan_shapes(spark):
             QUERY_REGISTRY[name].fn(spark, sf)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        spark.catalog.clearCache()
         return p
 
     p253 = plan("q253_doc_readability_scores")
@@ -2081,7 +2071,6 @@ def test_round7_batch24_plan_shapes(spark):
             QUERY_REGISTRY[name].fn(spark, sf)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        spark.catalog.clearCache()
         return p
 
     def is_local(p):
@@ -2201,7 +2190,6 @@ def test_distributed_rank_matches_global_window_on_skew(spark):
         g = g.select("u", ntile_from_rank("rk", "__n", k).cast("int").alias("b"))
         nv = sub.select("u", F.ntile(k).over(Window.orderBy("u")).alias("b"))
         assert g.exceptAll(nv).count() == 0 and nv.exceptAll(g).count() == 0, (n, k)
-    spark.catalog.clearCache()
 
 
 def test_round8_dewindowed_plan_shapes(spark):
@@ -2230,7 +2218,6 @@ def test_round8_dewindowed_plan_shapes(spark):
             QUERY_REGISTRY[name].fn(spark, sf)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        spark.catalog.clearCache()
         return p
 
     p202 = plan("q202_rfm_segmentation")
@@ -2296,7 +2283,6 @@ def test_distributed_cumsums_matches_global_window(spark):
     naiveg = df.select("g", "id", F.sum("a").over(wg).alias("ca"))
     assert gotg.exceptAll(naiveg).count() == 0
     assert naiveg.exceptAll(gotg).count() == 0
-    spark.catalog.clearCache()
 
 
 def test_round9_dewindowed_plan_shapes(spark):
@@ -2320,7 +2306,6 @@ def test_round9_dewindowed_plan_shapes(spark):
             QUERY_REGISTRY[name].fn(spark, sf)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        spark.catalog.clearCache()
         return p
 
     for name, marker in [
