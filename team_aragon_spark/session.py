@@ -62,7 +62,7 @@ def get_spark(app_name: str = "team-aragon-spark") -> SparkSession:
 
 
 @contextmanager
-def query_scope(spark: SparkSession) -> Iterator[SparkSession]:
+def query_scope(spark: SparkSession) -> Iterator[None]:
     """The one place where query-run storage is released.
 
     Enclose a query's run AND the consumption of its lazy result, which
@@ -74,7 +74,7 @@ def query_scope(spark: SparkSession) -> Iterator[SparkSession]:
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
     try:
-        yield spark
+        yield
     finally:
         spark.catalog.clearCache()
         for rdd_id, rdd in jsc.getPersistentRDDs().items():

@@ -43,15 +43,19 @@ def test_time_queries_cold_is_first_pass_steady_is_min(spark):
 def test_query_scope_releases_only_what_it_saw_materialized(spark):
     """A DataFrame persist and both local-checkpoint forms go on exit
     (``clearCache()`` alone misses the checkpoints); an RDD cached
-    before entry stays."""
+    before entry stays.  The registry holds its RDDs weakly, so the
+    test holds every DataFrame: a JVM GC must not release them first."""
     jsc = spark.sparkContext._jsc
     kept = spark.sparkContext.parallelize(range(8)).cache()
     assert kept.sum() == 28
     before = set(jsc.getPersistentRDDs().keySet())
     with query_scope(spark):
-        assert spark.range(10).persist().count() == 10
-        spark.range(11).localCheckpoint(eager=True)
-        assert spark.range(12).localCheckpoint(eager=False).count() == 12
+        held = [
+            spark.range(10).persist(),
+            spark.range(11).localCheckpoint(eager=True),
+            spark.range(12).localCheckpoint(eager=False),
+        ]
+        assert [df.count() for df in held] == [10, 11, 12]
         assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 3
     assert set(jsc.getPersistentRDDs().keySet()) == before
 
