@@ -67,9 +67,9 @@ def query_scope(spark: SparkSession) -> Iterator[None]:
 
     Enclose a query's run AND the consumption of its lazy result, which
     still reads what the query persisted or checkpointed.  On exit:
-    ``clearCache()``, then unpersist every RDD that became persistent
-    inside the scope (local checkpoints, ``rdd.cache()``); other RDDs
-    persistent before entry survive.  Non-blocking, like ``clearCache()``.
+    ``clearCache()``, which drops EVERY DataFrame cache, made before entry
+    too; then unpersist each RDD that became persistent inside the scope
+    (local checkpoints, ``rdd.cache()``; older ones survive).  Non-blocking.
     """
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())

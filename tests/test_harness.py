@@ -10,6 +10,7 @@ import os
 
 import pytest
 from conftest import SF_SMOKE
+from pyspark import StorageLevel
 
 from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
 from team_aragon_spark.session import query_scope
@@ -43,12 +44,16 @@ def test_time_queries_cold_is_first_pass_steady_is_min(spark):
 def test_query_scope_releases_only_what_it_saw_materialized(spark):
     """A DataFrame persist and both local-checkpoint forms go on exit
     (``clearCache()`` alone misses the checkpoints); an RDD cached
-    before entry stays.  The registry holds its RDDs weakly, so the
-    test holds every DataFrame: a JVM GC must not release them first."""
+    before entry stays, a DataFrame cached before entry does not (the
+    clear drops every DataFrame cache).  The registry holds its RDDs
+    weakly, so the test holds every DataFrame: a JVM GC must not
+    release them first."""
     jsc = spark.sparkContext._jsc
     kept = spark.sparkContext.parallelize(range(8)).cache()
     assert kept.sum() == 28
     before = set(jsc.getPersistentRDDs().keySet())
+    table = spark.range(9).persist()
+    assert table.count() == 9
     with query_scope(spark):
         held = [
             spark.range(10).persist(),
@@ -56,8 +61,9 @@ def test_query_scope_releases_only_what_it_saw_materialized(spark):
             spark.range(12).localCheckpoint(eager=False),
         ]
         assert [df.count() for df in held] == [10, 11, 12]
-        assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 3
+        assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 4
     assert set(jsc.getPersistentRDDs().keySet()) == before
+    assert table.storageLevel == StorageLevel.NONE
 
 
 def test_time_queries_leaves_no_persistent_rdds(spark):

@@ -3,9 +3,24 @@ tables co-locate joins (no shuffle Exchange in the plan)."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 from team_aragon_spark.operators.skew import salted_join
+from team_aragon_spark.session import query_scope
+
+
+def _executed_plan(spark, sf, name):
+    """Physical plan of registry query ``name``, built inside its own
+    ``query_scope`` so nothing it persisted is cached for the next plan."""
+    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
+
+    with query_scope(spark):
+        return (
+            QUERY_REGISTRY[name].fn(spark, sf)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -803,15 +818,9 @@ def test_round5_late_query_plan_shapes(spark):
     - q128 (snapshot diff): latest-wins snapshots are max_by
       aggregates, not windows.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        return (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
+    plan = partial(_executed_plan, spark, sf)
 
     p123 = plan("q123_token_bigram_counts")
     assert "TakeOrderedAndProject" in p123, p123
@@ -851,15 +860,9 @@ def test_iterative_and_divergence_query_plan_shapes(spark):
       the 3 unrolled iterations read InMemoryTableScan instead of
       re-scanning orders/lineitem once per iteration.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        return (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
+    plan = partial(_executed_plan, spark, sf)
 
     p129 = plan("q129_lang_source_chi2")
     assert "Window" not in p129 and "CartesianProduct" not in p129, p129
@@ -935,15 +938,9 @@ def test_analytics_batch_plan_shapes(spark):
     - q147 (Markov): no cartesian; normalization joins a broadcast
       |types|-row total.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        return (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
+    plan = partial(_executed_plan, spark, sf)
 
     p139 = plan("q139_user_value_twap")
     assert "user_id" in p139.split("Window")[1][:400], p139
@@ -976,17 +973,9 @@ def test_round6_new_query_plan_shapes(spark):
       doc-partitioned window, no join — with NO md5 call left in the
       fast path.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p154 = plan("q154_event_value_percentiles")
     assert "percentile" not in p154.lower(), "must not use the buffer aggregate"
@@ -1023,17 +1012,9 @@ def test_round7_new_query_plan_shapes(spark):
       JVM-expression map — no join, no Python eval; the only
       aggregation-side shuffle is the final presentation sort.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p165 = plan("q165_curation_pipeline")
     assert "CartesianProduct" not in p165
@@ -1145,17 +1126,9 @@ def test_round7_batch5_plan_shapes(spark):
     - q185 (audit): every edge joins at KEY granularity (sort-merge
       on the aggregated key table), no nested loops anywhere.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p180 = plan("q180_kmv_distinct_sketch")
     assert "CartesianProduct" not in p180
@@ -1217,17 +1190,9 @@ def test_round7_batch6_plan_shapes(spark):
       driver-assembled results — the loop work is asserted through
       the planted-semantics pins instead.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p187 = plan("q187_phrase_positional_search")
     assert "CartesianProduct" not in p187
@@ -1285,17 +1250,9 @@ def test_round7_batch7_plan_shapes(spark):
     - q196 (session paths): windows partitioned by user (no global
       ordered window over events); path aggregate + k-heap.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p191 = plan("q191_user_activity_bitmap")
     assert "Join" not in p191 and "Window" not in p191
@@ -1355,17 +1312,9 @@ def test_round7_batch8_plan_shapes(spark):
     - q201 (Zipf): the rank window runs over the min-count-filtered
       vocabulary (post-aggregate), never raw tokens.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p197 = plan("q197_capped_running_balance")
     assert p197.count("MapInPandas") == 1
@@ -1419,17 +1368,9 @@ def test_round7_batch9_plan_shapes(spark):
       value-count table (Window above HashAggregate); no raw-row
       global sort anywhere.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     for name in (
         "q202_rfm_segmentation",
@@ -1479,17 +1420,9 @@ def test_round7_batch10_plan_shapes(spark):
     - q211 (assortativity): distinct pair relation cache-served;
       degree joins; one moment aggregate.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     for name in (
         "q208_order_volume_changepoint",
@@ -1532,17 +1465,9 @@ def test_round7_batch11_plan_shapes(spark):
       joins; degrees broadcast; anti-join against the cached edge
       set; top-k by the integer key is a heap.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     for name in (
         "q213_markov_heldout_accuracy",
@@ -1580,17 +1505,9 @@ def test_round7_batch12_plan_shapes(spark):
     - q219 (bootstrap): one Generate (explode) feeds a B-group
       map-combined aggregate; no join of data against data.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     for name in (
         "q217_prediction_calibration",
@@ -1629,16 +1546,9 @@ def test_round7_batch13_plan_shapes(spark):
       sink); its semantics are pinned by the planted histogram test
       and the batch oracle.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p221 = plan("q221_point_in_time_feature_join")
     assert "Join" not in p221, "as-of must be union-merge, not a join"
@@ -1663,16 +1573,9 @@ def test_round7_batch14_plan_shapes(spark):
       sides; the median runs on the slope COUNT TABLE (the q154
       operator), no raw-slope buffer.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     for name in (
         "q223_wasserstein_value_drift",
@@ -1694,17 +1597,9 @@ def test_round7_batch15_plan_shapes(spark):
       over the (flag, value) count table (HashAggregate below
       Window), never raw lineitem.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p226 = plan("q226_windowed_funnel")
     assert "CartesianProduct" not in p226
@@ -1734,17 +1629,9 @@ def test_round7_batch17_plan_shapes(spark):
     - q232 (LLR): source marginal + grand total broadcast; no
       cartesian products beyond broadcast-tiny crossJoins.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     for name in ("q228_kaplan_meier_survival", "q230_forecast_backtest"):
         p = plan(name)
@@ -1782,17 +1669,9 @@ def test_round7_batch18_plan_shapes(spark):
       generalization levels (the explode plan, q176's shape).
     - q236 (PRF1): pure JVM expressions, no Python.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p233 = plan("q233_spearman_corr")
     assert p233.count("BroadcastHashJoin") >= 3, "rank maps must broadcast"
@@ -1829,17 +1708,9 @@ def test_round7_batch19_plan_shapes(spark):
       broadcast (top-M prefix, max-history scalar); no cartesian
       beyond broadcast-tiny crossJoins; no Python.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p237 = plan("q237_weighted_shortest_path")
     assert "CartesianProduct" not in p237
@@ -1876,16 +1747,9 @@ def test_round7_batch20_plan_shapes(spark):
     - q244 (bursts): lag/cumsum islands at (user, type) grain; the
       final aggregate is types-sized; no Python.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p241 = plan("q241_holt_trend_forecast")
     assert "CartesianProduct" not in p241
@@ -1920,17 +1784,9 @@ def test_round7_batch21_plan_shapes(spark):
       1-row broadcast stats crossJoin; candidate pairs come from the
       block-key equi-join.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p245 = plan("q245_activity_lease_coverage")
     assert "CartesianProduct" not in p245
@@ -1973,16 +1829,9 @@ def test_round7_batch22_plan_shapes(spark):
     - q252 (NDCG): the only nested-loop joins broadcast the constant
       centroid/IDCG relations; cosine scoring is JVM expressions.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p249 = plan("q249_watermark_delay_audit")
     assert "CartesianProduct" not in p249
@@ -2017,16 +1866,9 @@ def test_round7_batch23_plan_shapes(spark):
       sort; the tagged relation persists.
     - q256 (kNN eval): label relations broadcast; scoring is JVM.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p253 = plan("q253_doc_readability_scores")
     assert "hashpartitioning" not in p253, "readability must not shuffle"
@@ -2062,16 +1904,9 @@ def test_round7_batch24_plan_shapes(spark):
     - q260 (retention triangle): the distinct (user, week) relation
       persists; cohort sizes broadcast onto the activity cells.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     def is_local(p):
         return (
@@ -2107,17 +1942,9 @@ def test_round7_batch25_plan_shapes(spark):
     - q263 (trending): the week-over-week join runs on the
       persisted top-k relation, never on the raw counts.
     """
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p261 = plan("q261_geometric_median_weiszfeld")
     assert "CartesianProduct" not in p261
@@ -2209,16 +2036,9 @@ def test_round8_dewindowed_plan_shapes(spark):
     """
     import re
 
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     p202 = plan("q202_rfm_segmentation")
     rn_windows = [
@@ -2297,16 +2117,9 @@ def test_round9_dewindowed_plan_shapes(spark):
     bounded limit."""
     import re
 
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     for name, marker in [
         ("q193_mann_whitney_utest", "cnt"),
@@ -2345,17 +2158,9 @@ def test_late_round9_ann_plan_shapes(spark):
     partition id like the q193 family."""
     import re
 
-    from team_aragon_spark.plans.star_queries import QUERY_REGISTRY
-
     sf = "/root/testdata/sf0.001"
 
-    def plan(name):
-        p = (
-            QUERY_REGISTRY[name].fn(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.catalog.clearCache()
-        return p
+    plan = partial(_executed_plan, spark, sf)
 
     for name, min_bcast in [
         ("q287_truncation_recall_audit", 3),
